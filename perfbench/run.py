@@ -120,9 +120,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--record-digests", action="store_true",
-                    help="store this run's curate_text digests instead of "
-                         "checking them (after an intended output change)")
     a = ap.parse_args()
     start = time.time()
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt")) and
@@ -140,15 +137,16 @@ def main():
     cmd = ["java"]
     for p in ADD_OPENS:
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
-    cmd += ["-Xmx3g", f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
+    # compiler threads that live as long as the JVM (Stats.workCpuNs)
+    cmd += ["-XX:-UseDynamicNumberOfCompilerThreads"]
+    # a fixed heap: no run's timings depend on when the heap grew
+    cmd += ["-Xms3g", "-Xmx3g", f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
             "-cp", classpath, "graft.perfbench.Main",
             "--workload", a.workload, "--seed", str(a.seed),
             "--seconds", str(a.seconds), "--trace", str(a.trace),
             "--cores", str(cores), "--work", work,
             "--digests", os.path.join(BENCH, "curate_digests.txt"),
             "--traces", os.path.join(BUILD, "traces")]
-    if a.record_digests:
-        cmd.append("--record-digests")
     try:
         code, out = run_bounded(cmd, ROOT, deadline - time.time(),
                                 stdout=subprocess.PIPE)

@@ -127,9 +127,7 @@ object Lake {
 
   def objects(dir: String): Int = dataFiles(dir).size
 
-  /** Local path of a `file:` URI as Find reports it. */
-  def localPath(p: String): String =
-    if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-
-  def sizeOf(p: String): Long = new java.io.File(localPath(p)).length
+  /** Size of an object as Find reports its path. */
+  def sizeOf(p: String): Long =
+    new java.io.File(graft.forget.Forget.stripScheme(p)).length
 }

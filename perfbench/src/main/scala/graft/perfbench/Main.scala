@@ -7,24 +7,23 @@ import scala.collection.mutable
   *
   * Usage: Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
   *             --cores <n> --work <dir> --digests <file> --traces <dir>
-  *             [--record-digests]
   *
   * Prints a detail line and then, last, the result line:
   * `{"correct", "attempted", "failed", "metrics"}`. Exits 1 when a check
   * failed. */
 object Main {
-  /** Stagings per run: setup_s counts the median one. */
-  val Copies = 3
-
   val Shapes: Map[String, EraseShape] = Map(
     "erase_many_objects" -> EraseShape(orders = 8000, lineObjects = 256,
       scatter = true, orderObjects = 16, present = 32, absent = 0),
     "erase_big_queue" -> EraseShape(orders = 8000, lineObjects = 256,
       scatter = false, orderObjects = 0, present = 32, absent = 4096 - 32))
+  /** Untimed jobs first: the process CPU of a job still falls over the
+    * first few while the JIT compiles the erase path. */
+  val EraseWarmups = 3
   val CurateDocs = 2000L
   /** Untimed passes first: the entries' many distinct plans keep the JIT
     * busy, and each entry's time still falls over the first three passes. */
-  val CurateWarmups = 2
+  val CurateWarmups = 3
   /** Timed passes per run at least: the streaming entry's wall time
     * swings with micro-batch timing, so its median needs several. */
   val CuratePasses = 4
@@ -49,15 +48,14 @@ object Main {
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sessionS = (System.currentTimeMillis() - Stats.jvmStartMs) / 1e3
+    val sessionS = Stats.sinceJvmStart()
     val tracer = if (trace) Some(new Tracer(spark.sparkContext)) else None
     val t0Ns = System.nanoTime()
 
     val run = new Run(spark, seed, seconds, tracer, work, sessionS)
     val out = workload match {
       case w if Shapes.contains(w) => run.erase(Shapes(w))
-      case "curate_text" =>
-        run.curate(opt("digests"), args.contains("--record-digests"))
+      case "curate_text" => run.curate(opt("digests"))
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
     tracer.foreach { t =>
@@ -90,11 +88,11 @@ final class Run(spark: SparkSession, seed: Long, seconds: Double,
 
   /** Closed loop: the next job starts when the previous one returned.
     * In a traced run, traced and untraced jobs alternate, traced first. */
-  private def loop(minJobs: Int)(job: Int => Boolean => Unit): Int = {
+  private def loop(minJobs: Int)(job: Boolean => Unit): Int = {
     val t0 = System.nanoTime()
     var n = 0
     while ((System.nanoTime() - t0) / 1e9 < seconds || n < minJobs) {
-      job(n)(tracer.isDefined && n % 2 == 0)
+      job(tracer.isDefined && n % 2 == 0)
       n += 1
     }
     n
@@ -105,30 +103,28 @@ final class Run(spark: SparkSession, seed: Long, seconds: Double,
 
   def erase(shape: EraseShape): Outcome = {
     val e = new Erase(spark, shape, seed, work)
-    val staged = (0 until Main.Copies).map(k => Stats.time(e.stage(k)))
-    val copies = staged.map(_._1)
+    val (lake, stagingS) = Stats.time(e.stage())
     val checks = new Checks
-    // the first job warms the JVM; it is set-up, not a sample
-    val warm = e.runJob(copies.head, checks).wall
+    // the first jobs warm the JVM; they are set-up, not samples
+    val warm = Stats.time((1 to Main.EraseWarmups).foreach(_ =>
+      e.runJob(lake, checks)))._2
+    val setupS = Stats.sinceJvmStart()
     val plain = mutable.ArrayBuffer.empty[Erase.JobSample]
     val traced = mutable.ArrayBuffer.empty[Erase.TracedSample]
     // two samples at least: a traced run needs one of each kind
-    val jobs = loop(2) { n => t =>
-      val c = copies(n % copies.size)
-      if (t) traced += e.runTracedJob(c, tracer.get, checks)
-      else plain += e.runJob(c, checks)
+    val jobs = loop(2) { t =>
+      if (t) traced += e.runTracedJob(lake, tracer.get, checks)
+      else plain += e.runJob(lake, checks)
     }
     val m = zeros
-    m("setup_s") = sessionS + median(staged.map(_._2)) + warm
+    m("setup_s") = setupS
     m("job_s") = median(plain.map(_.wall).toSeq)
     m("job_cpu_s") = median(plain.map(_.cpu).toSeq)
     m("ids_per_s") = median(plain.map(s => s.ids / s.wall).toSeq)
     m("objects_per_min") = median(plain.map(s => s.objects * 60 / s.wall).toSeq)
-    val before = copies.map(_.bytesBefore).sum.toDouble /
-      copies.map(_.rowsBefore).sum
-    val after = copies.map(_.bytes).sum.toDouble / copies.map(_.rows).sum
-    m("bytes_per_row_drift") = after / before
-    m("scan_after_s") = e.scanAfter(copies.head)
+    m("bytes_per_row_drift") = (lake.bytes.toDouble / lake.rows) /
+      (lake.bytesBefore.toDouble / lake.rowsBefore)
+    m("scan_after_s") = e.scanAfter(lake)
     m("process.rss_peak_mb") = Stats.rssPeakMb()
     tracer.foreach { tr =>
       tr.drain()
@@ -142,7 +138,7 @@ final class Run(spark: SparkSession, seed: Long, seconds: Double,
     Outcome(m.toMap, checks, Seq(
       "jobs" -> Json.num(jobs.toLong),
       "session_s" -> Json.num(sessionS),
-      "staging_s" -> Json.arr(staged.map(s => Json.num(s._2))),
+      "staging_s" -> Json.num(stagingS),
       "warmup_s" -> Json.num(warm),
       "job_s_samples" -> Json.arr(plain.map(s => Json.num(s.wall)).toSeq),
       "job_cpu_s_samples" -> Json.arr(plain.map(s => Json.num(s.cpu)).toSeq),
@@ -210,11 +206,9 @@ final class Run(spark: SparkSession, seed: Long, seconds: Double,
         secs("forget.run") + secs("jobs.fold")))
   }
 
-  def curate(digestFile: String, record: Boolean): Outcome = {
+  def curate(digestFile: String): Outcome = {
     val cu = new Curate(spark, Main.CurateDocs, work)
-    val staged = (0 until Main.Copies).map(k => Stats.time(cu.stage(k)))
-    // every pass reads the first copy, whose artifacts the warm-up builds
-    val dir = staged.head._1
+    val (dir, stagingS) = Stats.time(cu.stage())
     val before = cu.bytes(dir)
     val corpus = s"docs=${Main.CurateDocs}"
     val expected = Digests.read(digestFile).getOrElse(corpus, Map.empty)
@@ -228,7 +222,7 @@ final class Run(spark: SparkSession, seed: Long, seconds: Double,
       try {
         val d = cu.run(name, dir)
         seen(name) = d
-        checks(record || expected.get(name).contains(d),
+        checks(expected.get(name).contains(d),
           s"$name digest $d, stored ${expected.getOrElse(name, "none")}")
       } catch {
         case scala.util.control.NonFatal(e) =>
@@ -239,7 +233,8 @@ final class Run(spark: SparkSession, seed: Long, seconds: Double,
     val order = Metrics.CurateEntries.map(_._1)
     val warm = Stats.time((1 to Main.CurateWarmups).foreach(_ =>
       order.foreach(entry(_, dir))))._2
-    val jobs = loop(Main.CuratePasses) { n => t =>
+    val setupS = Stats.sinceJvmStart()
+    val jobs = loop(Main.CuratePasses) { t =>
       if (t) roots += tracer.get.span("pass", -1) { root =>
         order.foreach(name =>
           tracer.get.span(s"${modules(name)}.$name", root)(_ => entry(name, dir)))
@@ -252,15 +247,13 @@ final class Run(spark: SparkSession, seed: Long, seconds: Double,
           (Stats.workCpuNs() - cpu0) / 1e9)
       }.toMap
     }
-    if (record && checks.failed == 0)
-      Digests.write(digestFile, corpus, seen.toSeq.sortBy(_._1))
     val m = zeros
     val entries = Metrics.CurateEntries.size
     // a pass's time is the sum of its entries' medians: one slow
     // micro-batch run of the streaming entry moves its own median only
     def passOf(f: ((Double, Double)) => Double) =
       order.map(name => median(plain.map(p => f(p(name))).toSeq)).sum
-    m("setup_s") = sessionS + median(staged.map(_._2)) + warm
+    m("setup_s") = setupS
     m("job_s") = passOf(_._1)
     m("job_cpu_s") = passOf(_._2)
     m("ids_per_s") = Main.CurateDocs * entries / m("job_s")
@@ -293,10 +286,12 @@ final class Run(spark: SparkSession, seed: Long, seconds: Double,
     Outcome(m.toMap, checks, Seq(
       "jobs" -> Json.num(jobs.toLong),
       "session_s" -> Json.num(sessionS),
-      "staging_s" -> Json.arr(staged.map(s => Json.num(s._2))),
+      "staging_s" -> Json.num(stagingS),
       "warmup_s" -> Json.num(warm),
       "job_s_samples" -> Json.arr(plain.map(p =>
         Json.num(p.values.map(_._1).sum)).toSeq),
+      "job_cpu_s_samples" -> Json.arr(plain.map(p =>
+        Json.num(p.values.map(_._2).sum)).toSeq),
       "entry_s_samples" -> Json.obj(order.map(name =>
         name -> Json.arr(plain.map(p => Json.num(p(name)._1)).toSeq))),
       "digests" -> Json.obj(seen.toSeq.map(kv => kv._1 -> Json.str(kv._2))),
@@ -319,9 +314,4 @@ object Digests {
       finally src.close()
     }
   }
-
-  def write(file: String, corpus: String, rows: Seq[(String, String)]): Unit =
-    java.nio.file.Files.writeString(new java.io.File(file).toPath,
-      ("# <corpus> <entry> <rows:hash-low-sum:hash-high-sum>" +:
-        rows.map { case (e, d) => s"$corpus $e $d" }).mkString("", "\n", "\n"))
 }

@@ -6,17 +6,38 @@ object Stats {
     .getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-  private val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+  /** CPU time of the process (driver, local executors and collector)
+    * less that of its JIT compiler threads, ns: the program's work. In a
+    * run this short the compilers are still busy, and their share swings
+    * from run to run. Their CPU is read per thread from /proc, and
+    * run.py keeps every compiler thread alive for the JVM's life, so no
+    * thread's time drops out of the sum between two readings. */
+  def workCpuNs(): Long = os.getProcessCpuTime - compilerCpuNs()
 
-  /** CPU time of the whole process (driver and local executors) minus
-    * the time its JIT compilers spent, ns: the program's work. In a run this short the compilers are still busy
-    * and their share swings from run to run. */
-  def workCpuNs(): Long =
-    os.getProcessCpuTime - jit.getTotalCompilationTime * 1000000L
+  private val TickNs = 10000000L // USER_HZ = 100
 
-  /** Milliseconds since the epoch at which this JVM started. */
-  def jvmStartMs: Long =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
+  /** utime + stime of the C1/C2 compiler threads, ns; 0 without /proc. */
+  private def compilerCpuNs(): Long = {
+    val tasks = Option(new java.io.File("/proc/self/task").listFiles())
+    tasks.toSeq.flatten.map { t =>
+      try {
+        val stat = java.nio.file.Files.readString(
+          new java.io.File(t, "stat").toPath)
+        val close = stat.lastIndexOf(')')
+        val comm = stat.substring(stat.indexOf('(') + 1, close)
+        if (comm.startsWith("C1 CompilerThre") ||
+            comm.startsWith("C2 CompilerThre")) {
+          // fields after the name start at state (3); utime is 14
+          val f = stat.substring(close + 2).split(' ')
+          (f(11).toLong + f(12).toLong) * TickNs
+        } else 0L
+      } catch { case _: java.io.IOException => 0L } // a thread that ended
+    }.sum
+  }
+
+  /** Wall seconds since this JVM started. */
+  def sinceJvmStart(): Double = (System.currentTimeMillis() -
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
 
   /** Peak resident set size of this process in MB (VmHWM), or the
     * current heap commitment where /proc is absent. */
