@@ -450,7 +450,7 @@ object Bench {
     // l_orderkey chunk alone is ~24% of the compressed bytes (the
     // reference's 1.3-7% comes from wider production tables); the plan
     // reads exactly the identifier chunks, which IS the optimum.
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = spark.sparkContext.hadoopConfiguration
     val scanLineitem = ParquetStats.columnBytes(conf,
       s"$sfDir/lineitem.parquet", Seq("l_orderkey"))
     val scanCustomer = ParquetStats.columnBytes(conf,

@@ -884,8 +884,7 @@ object SparkEntry {
       // (driver-side metadata, no job) — an emb.count() here paid a
       // full scan stage per invocation just to size a knob
       val n = graft.tools.ParquetStats.rowCount(
-        new org.apache.hadoop.conf.Configuration(),
-        s"$dir/embeddings.parquet")
+        s.sparkContext.hadoopConfiguration, s"$dir/embeddings.parquet")
       RandomHyperplaneLsh.auto(dim = 64, n = n,
           targetBucket = 64, tables = 16)
         .nearPairs(emb, "vec_id", "embedding", threshold = 0.4)
@@ -901,8 +900,7 @@ object SparkEntry {
       import graft.llm.RandomHyperplaneLsh
       val emb = t(s, dir, "embeddings")
       val n = graft.tools.ParquetStats.rowCount(
-        new org.apache.hadoop.conf.Configuration(),
-        s"$dir/embeddings.parquet")
+        s.sparkContext.hadoopConfiguration, s"$dir/embeddings.parquet")
       RandomHyperplaneLsh.auto(dim = 64, n = n,
           targetBucket = 64, tables = 16)
         .nearJoin(emb.filter(col("vec_id") % 5 =!= 0),

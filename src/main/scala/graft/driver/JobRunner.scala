@@ -2,11 +2,10 @@ package graft.driver
 
 import graft.catalog.{Catalog, TableDef}
 import graft.find.Finder
-import graft.forget.{DistributedRewrite, Forget, JsonMatch}
+import graft.forget.{DistributedRewrite, Forget}
 import graft.jobs.Jobs
 import graft.model._
 import graft.tools.ParquetStats
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
@@ -17,8 +16,9 @@ import scala.util.control.NonFatal
   *
   *   JobStarted → FindPhaseStarted → per-mapper Find query
   *   (QuerySucceeded/QueryFailed, fail-fast like work_query_queue.py:37-46)
-  *   → FindPhaseEnded → ForgetPhaseStarted → one distributed rewrite job
-  *   over all found objects → ForgetPhaseEnded → deletion-queue cleanup
+  *   → FindPhaseEnded → ForgetPhaseStarted → one [[DistributedRewrite]]
+  *   Spark job per mapper with matches, up to 32 objects per task
+  *   → ForgetPhaseEnded → deletion-queue cleanup
   *   (stream_processor.py:129-139) → CleanupSucceeded/CleanupFailed,
   *
   * with every phase emitting [[graft.model.JobEvent]]s that
@@ -45,17 +45,10 @@ object JobRunner {
       settings: JobSettings = JobSettings(),
       expiresAt: Option[Long] = None)
 
-  /** Run a full deletion job.
-    *
-    * @param distributed true = [[DistributedRewrite]] (one Spark job, one
-    *                    task per object — the at-scale path); false = the
-    *                    driver-pool [[Forget.run]] (per-file Spark jobs,
-    *                    exact writer parity with spark.write)
-    */
+  /** Run a full deletion job. */
   def run(spark: SparkSession, jobId: String,
           mappers: Seq[(DataMapper, TableDef)],
           queue: Seq[DeletionQueueItem],
-          distributed: Boolean = true,
           outPathFor: String => Option[String] = _ => None,
           manifestAuditDir: Option[String] = None,
           settings: JobSettings = JobSettings(),
@@ -126,8 +119,10 @@ object JobRunner {
             val bytes = table.format match {
               case DataFormat.Parquet =>
                 // identifier-columns-only projection: the scan cost is the
-                // pruned column chunks (README.md:75-81), not the table
-                ParquetStats.columnBytes(new Configuration(),
+                // pruned column chunks (README.md:75-81), not the table.
+                // The session's conf: it knows every spark.hadoop.* scheme
+                ParquetStats.columnBytes(
+                  spark.sparkContext.hadoopConfiguration,
                   paths.map(Forget.stripScheme), m.columns).selected
               case DataFormat.JsonLines =>
                 // row format has no column pruning: a Find is a full scan
@@ -185,7 +180,8 @@ object JobRunner {
       events += ev(JobEventName.FindPhaseEnded)
       events += ev(JobEventName.ForgetPhaseStarted)
 
-      // ---- Forget phase: ONE distributed job across every found object.
+      // ---- Forget phase: one DistributedRewrite job per mapper with
+      // matches; each task rewrites up to 32 of its objects.
       // A Spark-level failure here (lost executors, driver I/O) must still
       // land in the event log: the reference's Fargate SM failure maps to
       // ForgetPhaseFailed → FORGET_FAILED (status_updater.py:20).
@@ -196,12 +192,8 @@ object JobRunner {
             val units = paths.map(p =>
               ObjectWorkUnit(jobId, p, m.id, table.format,
                 m.deleteOldVersions, m.ignoreObjectNotFound))
-            val groups = groupsByMapper(m.id)
-            events ++= (if (distributed)
-              DistributedRewrite.run(spark, jobId, units, groups, outPathFor)
-            else Forget.run(spark, jobId, units, groups,
-              maxParallel = settings.deletionTasksMaxNumber,
-              outPathFor = outPathFor))
+            events ++= DistributedRewrite.run(spark, jobId, units,
+              groupsByMapper(m.id), outPathFor)
           }
         }
         events += ev(JobEventName.ForgetPhaseEnded)

@@ -18,13 +18,11 @@ import org.apache.spark.sql.SparkSession
 import java.util.UUID
 import scala.util.control.NonFatal
 
-/** Distributed Forget: ONE Spark job over the whole object queue, one task
-  * per file, the rewrite performed INSIDE the task with parquet-mr / raw
-  * streams — no per-file driver-scheduled Spark actions (VERDICT r2 "What's
-  * wrong" #2: the thread-pool Forget issued ~3 driver jobs per object;
-  * at the reference's scenario 4 — 45,300 objects,
-  * /root/reference/docs/COST_OVERVIEW.md:288-290 — that is ~135k driver
-  * jobs, where this is ONE job with 45,300 tasks).
+/** The Forget engine: ONE Spark job over a mapper's matched objects, up
+  * to 32 objects per task (see [[runWith]]), the rewrite performed INSIDE
+  * the task with parquet-mr / raw streams — no per-object driver-scheduled
+  * Spark actions, so the reference's scenario 4 (45,300 objects,
+  * docs/COST_OVERVIEW.md:288-290) is one job, not tens of thousands.
   *
   * This is the Spark analog of the reference's Fargate fleet
   * (backend/ecs_tasks/delete_files/main.py:288-306: N containers × process
@@ -118,10 +116,6 @@ object DistributedRewrite {
       }
       TaskGroupSpec(tg.group.columns.map(_.split('.').toSeq), tuples)
     }
-
-  // ------------------------------------------------------------------
-  // Task-side parquet value extraction + comparison
-  // ------------------------------------------------------------------
 
   // ------------------------------------------------------------------
   // Local-filesystem fast path (★r21 optimization round)
@@ -513,7 +507,7 @@ object DistributedRewrite {
       s"$path was found by Find but Forget deleted 0 rows"
   }
 
-  /** Rewrite every work unit in ONE Spark job (one task per file).
+  /** Rewrite every work unit in ONE Spark job (up to 32 objects per task).
     * Returns the job events (sorted by sk); live progress is visible on
     * the two accumulators (`graft.forget.rowsProcessed|rowsDeleted`).
     * Match-group cast validation ([[buildSpecs]]) runs BEFORE the
@@ -563,16 +557,11 @@ object DistributedRewrite {
     // committed member from its own done marker exactly as the
     // one-task-per-object shape did. k is scale-adaptive (targets
     // 8 task waves per core so stragglers amortize — a fixed k would
-    // under-split small queues or leave 40k tasks at soak scale),
-    // bounded to 32 objects so one retry never redoes more than that,
-    // and overridable via `graft.forget.objectsPerTask` (set 1 to
-    // restore the exact former dispatch).
-    val objectsPerTask: Int = {
-      val auto = math.ceil(work.size.toDouble /
-        (spark.sparkContext.defaultParallelism.toDouble * 8)).toInt
-      spark.conf.getOption("graft.forget.objectsPerTask")
-        .map(_.toInt).getOrElse(math.min(32, math.max(1, auto)))
-    }
+    // under-split small queues or leave 40k tasks at soak scale) and
+    // bounded to 32 objects so one retry never redoes more than that.
+    val objectsPerTask: Int = math.min(32, math.max(1,
+      math.ceil(work.size.toDouble /
+        (spark.sparkContext.defaultParallelism.toDouble * 8)).toInt))
     val numSlices = math.max(1,
       math.ceil(work.size.toDouble / objectsPerTask).toInt)
     val outcomes = spark.sparkContext
@@ -777,11 +766,10 @@ object DistributedRewrite {
     * ParquetConfiguration) — and ParquetFileReader.open's no-options
     * overload — eagerly constructs a FRESH `new Configuration()`,
     * which re-parses core-default.xml/core-site.xml out of the jars
-    * (~8 ms, measured by the PerfProbe `forgettask` sampler: the
-    * "footer open" phase was Inflater + woodstox XML frames, not
-    * parquet). On a many-small-object forget job that tax lands
-    * twice PER OBJECT; both call sites below thread the task's
-    * existing conf instead. */
+    * (~8 ms; a stack sampler put the "footer open" time in Inflater +
+    * woodstox XML frames, not parquet). On a many-small-object forget
+    * job that tax lands twice PER OBJECT; both call sites below thread
+    * the task's existing conf instead. */
   private[graft] def groupReader(conf: Configuration,
                                  src: HPath): ParquetReader[Group] =
     new ParquetReader.Builder[Group](parquetInput(conf, src),
@@ -791,7 +779,9 @@ object DistributedRewrite {
         new GroupReadSupport()
     }.build()
 
-  /** Footer read reusing the caller's conf (see [[groupReader]]). */
+  /** Footer read reusing the caller's conf (see [[groupReader]]) — the
+    * program's one parquet footer reader ([[graft.tools.ParquetStats]]
+    * and the rewrites all come through here). */
   private[graft] def readFooter(conf: Configuration, src: HPath)
       : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     val r = ParquetFileReader.open(parquetInput(conf, src),
@@ -814,63 +804,6 @@ object DistributedRewrite {
     nioPath(fs, staged) match {
       case Some(p) => java.nio.file.Files.deleteIfExists(p); ()
       case None => fs.delete(staged, false); ()
-    }
-  }
-
-  /** Dev-probe instrumentation ([[graft.tools.PerfProbe]] `forgettask`):
-    * runs one object's task-body phases sequentially with per-phase
-    * nanosecond accumulators, so the soak rungs' per-object cpu has a
-    * phase budget. Never used by the job path. */
-  val probeTimers: scala.collection.mutable.LinkedHashMap[String, Long] =
-    scala.collection.mutable.LinkedHashMap.empty
-  private def probeTime[A](k: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    probeTimers(k) = probeTimers.getOrElse(k, 0L) + (System.nanoTime() - t0)
-    r
-  }
-  def probeParquetInput(conf: Configuration,
-                        src: HPath): org.apache.parquet.io.InputFile =
-    parquetInput(conf, src)
-  def probeTaskBody(conf: Configuration, path: String,
-                    specs: Seq[TaskGroupSpec]): Unit = {
-    // Destructive by design (commits the rewrite over its input with
-    // deleteOldVersions = true) — refuse anything outside the system
-    // temp directory so a mispointed probe cannot eat real data
-    // (★r22, ADVICE r21).
-    val tmpRoot = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir")).toRealPath()
-    val real = java.nio.file.Paths.get(path).toRealPath()
-    require(real.startsWith(tmpRoot),
-      s"probeTaskBody refuses non-temp path $path (probe staging only)")
-    val src = new HPath(path)
-    val dest = src
-    val fs = probeTime("stat") {
-      val f = src.getFileSystem(conf); f.getFileStatus(src); f
-    }
-    val st = fs.getFileStatus(src)
-    probeTime("marker_check") {
-      nioPath(fs, doneMarker(dest, "probe")) match {
-        case Some(p) => java.nio.file.Files.exists(p)
-        case None => fs.exists(doneMarker(dest, "probe"))
-      }
-    }
-    val staged = stagingPath(dest, jobTag("probe"))
-    probeTime("footer") { readFooter(conf, src) }
-    probeTime("reader_only") {
-      val r = groupReader(conf, src)
-      try { var g = r.read(); while (g != null) g = r.read() }
-      finally r.close()
-    }
-    probeTime("rewrite") {
-      rewriteParquetTaskTo(conf, src, staged, specs)
-    }
-    probeTime("commit") {
-      commitTask(conf, src, dest, staged, st.getLen,
-        st.getModificationTime, deleteOldVersions = true)
-    }
-    probeTime("marker_write") {
-      writeDoneMarker(fs, doneMarker(dest, "probe"), 1L, 1L)
     }
   }
 
@@ -908,11 +841,6 @@ object DistributedRewrite {
     } finally reader.close()
   }
 
-  /** Streaming line-at-a-time JSON rewrite: constant memory regardless of
-    * (decompressed) object size — one pass splitting on '\n' bytes, the
-    * raw line bytes written through verbatim + '\n' (json_handler.py:70;
-    * the final unterminated line still counts, boto_utils.py:251-256).
-    * Partial staged output is deleted on failure. */
   /** Raw byte stream endpoints on the fastest correct IO path (the
     * [[parquetInput]] rule for line-format rewrites); the nio output
     * is buffered because line rewrites issue many small writes. */
@@ -931,6 +859,11 @@ object DistributedRewrite {
       case None => staged.getFileSystem(conf).create(staged, true)
     }
 
+  /** Streaming line-at-a-time JSON rewrite: constant memory regardless of
+    * (decompressed) object size — one pass splitting on '\n' bytes, the
+    * raw line bytes written through verbatim + '\n' (json_handler.py:70;
+    * the final unterminated line still counts, boto_utils.py:251-256).
+    * Partial staged output is deleted on failure. */
   private def rewriteJsonTaskTo(conf: Configuration, src: HPath,
                                 staged: HPath,
                                 ev: JsonMatch.Evaluator): (Long, Long) = {

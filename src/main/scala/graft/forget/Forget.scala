@@ -1,235 +1,8 @@
 package graft.forget
 
-import graft.find.Finder
-import graft.find.Finder.GroupMatches
-import graft.model._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.UUID
-import scala.util.control.NonFatal
-
-/** Forget-phase engine: rewrite each matched object minus its matching
-  * rows, preserving the FILE as the unit of rewrite (SURVEY.md §7.4 risk 1;
-  * reference: backend/ecs_tasks/delete_files/main.py:132-265).
-  *
-  * Commit protocol per object (reference s3.py:61-98,301-357 semantics on
-  * a generic filesystem):
-  *   1. capture the source "version" (length + mtime) before reading;
-  *   2. write survivors to a staging file;
-  *   3. zero-deletion sanity check — a found object MUST lose rows
-  *      (main.py:182-187), else [[ZeroDeletionError]];
-  *   4. integrity check — the object must still be at the captured
-  *      version (no concurrent writer), else [[IntegrityCheckError]] and
-  *      the staging output is rolled back (deleted);
-  *   5. atomic move staging → destination.
-  *
-  * Row-group boundaries inside a rewritten parquet file are Spark's
-  * writer's choice — a documented deviation from the reference's byte-level
-  * row-group preservation (SURVEY.md §7.4).
-  *
-  * Scale notes: one Spark action per object keeps file boundaries exact;
-  * objects are processed with a bounded driver-side pool (the analog of the
-  * reference's `min(queueSize, DeletionTasksMaxNumber)` fleet scaling,
-  * orchestrate_ecs_service_scaling.py:18) and Spark's scheduler fans each
-  * file's row groups across executors. For very large object counts see
-  * [[DistributedRewrite]] (one task per file, no per-file job overhead).
-  */
+/** Path helpers shared by the Find → Forget hand-off. The Forget phase
+  * itself is [[DistributedRewrite]]. */
 object Forget {
-
-  /** Control-flow marker: missing object + ignoreObjectNotFound. */
-  private final class ObjectNotFoundSkip(path: String)
-      extends RuntimeException(s"$path not found (skipped)")
-
-  final case class Version(length: Long, mtimeMs: Long)
-
-  private def versionOf(p: Path): Version =
-    Version(Files.size(p), Files.getLastModifiedTime(p).toMillis)
-
-  /** Rewrite one parquet object. Returns (processed, deleted) row counts.
-    * `outPath` defaults to in-place replacement of `path`.
-    */
-  def rewriteParquet(spark: SparkSession, path: String,
-                     groups: Seq[GroupMatches],
-                     outPath: Option[String] = None): RewriteResult = {
-    val src = Paths.get(stripScheme(path))
-    val dest = Paths.get(stripScheme(outPath.getOrElse(path)))
-    val sourceVersion = versionOf(src)
-
-    val df = spark.read.parquet(src.toString)
-    val processed = df.count()
-    val surviving = Finder.survivors(spark, df, groups)
-
-    withStaging { stagingDir =>
-      // one output file: the object is the unit of rewrite
-      surviving.coalesce(1).write
-        .mode(SaveMode.Overwrite)
-        .option("compression", "snappy")
-        .parquet(stagingDir.resolve("out").toString)
-      val part = firstPartFile(stagingDir.resolve("out"), ".parquet")
-      val kept = spark.read.parquet(part.toString).count()
-      val deleted = processed - kept
-      if (deleted == 0L)
-        throw new ZeroDeletionError(
-          s"$path was found by the Find phase but the Forget rewrite " +
-            "deleted 0 rows — Find/Forget are inconsistent")
-      commit(src, dest, part, sourceVersion, samePath = src == dest)
-      RewriteResult(path, processed, deleted, dest.toString)
-    }
-  }
-
-  /** Run `body` with a staging dir; always clean up. When `body` has
-    * already failed and the CLEANUP (= the rollback: destination untouched,
-    * staging discarded) also fails, escalate to [[RollbackFailedError]] —
-    * the only path that emits ObjectRollbackFailed. A cleanup failure after
-    * a successful rewrite is just a temp leak and is ignored. */
-  private def withStaging[A](body: Path => A): A = {
-    val stagingDir = Files.createTempDirectory("graft-forget-")
-    var failure: Throwable = null
-    try body(stagingDir)
-    catch { case NonFatal(e) => failure = e; throw e }
-    finally {
-      try deleteRecursively(stagingDir)
-      catch {
-        case NonFatal(c) if failure != null =>
-          // keep BOTH failures: the original as `original` (and suppressed)
-          // so run() can emit ObjectUpdateFailed for it, the cleanup
-          // failure as the cause (reference main.py:248-262 emits both)
-          val e = new RollbackFailedError(
-            s"rollback (staging cleanup) failed after: ${failure.getMessage}",
-            c, failure)
-          e.addSuppressed(failure)
-          throw e
-        case NonFatal(_) => () // successful rewrite; staging leak only
-      }
-    }
-  }
-
-  /** Rewrite one JSON-lines object (optionally gzip, by extension —
-    * reference main.py:172), preserving unmatched lines BYTE-FOR-BYTE:
-    * lines are only parsed to evaluate the predicate; survivors are the
-    * original raw strings (reference json_handler.py:41-74).
-    */
-  def rewriteJsonLines(spark: SparkSession, path: String,
-                       groups: Seq[GroupMatches],
-                       outPath: Option[String] = None): RewriteResult = {
-    import spark.implicits._
-    val src = Paths.get(stripScheme(path))
-    val dest = Paths.get(stripScheme(outPath.getOrElse(path)))
-    val gzip = src.toString.endsWith(".gz")
-    val sourceVersion = versionOf(src)
-
-    val lines = spark.read.textFile(src.toString)
-    val processed = lines.count()
-    val pred = JsonMatch.predicate(groups)
-    val surviving = lines.filter(not(pred(col("value"))))
-
-    withStaging { stagingDir =>
-      val w = surviving.coalesce(1).write.mode(SaveMode.Overwrite)
-      (if (gzip) w.option("compression", "gzip") else w)
-        .text(stagingDir.resolve("out").toString)
-      val ext = if (gzip) ".txt.gz" else ".txt"
-      val part = firstPartFile(stagingDir.resolve("out"), ext)
-      val kept = spark.read.textFile(part.toString).count()
-      val deleted = processed - kept
-      if (deleted == 0L)
-        throw new ZeroDeletionError(
-          s"$path found but 0 rows deleted — Find/Forget inconsistent")
-      commit(src, dest, part, sourceVersion, samePath = src == dest)
-      RewriteResult(path, processed, deleted, dest.toString)
-    }
-  }
-
-  /** Steps 4-5 of the commit protocol. */
-  private def commit(src: Path, dest: Path, staged: Path,
-                     sourceVersion: Version, samePath: Boolean): Unit = {
-    if (versionOf(src) != sourceVersion)
-      throw new IntegrityCheckError(
-        s"$src changed during rewrite (expected $sourceVersion, " +
-          s"found ${versionOf(src)}) — rolling back")
-    Files.createDirectories(dest.getParent)
-    try Files.move(staged, dest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      // staging tmpdir may sit on another filesystem: copy+move via a
-      // sibling temp file so the final rename stays atomic
-      val tmp = dest.resolveSibling(dest.getFileName.toString + ".graft-tmp-" +
-        UUID.randomUUID())
-      Files.copy(staged, tmp, StandardCopyOption.REPLACE_EXISTING)
-      Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    // the replaced object may carry a Hadoop LocalFileSystem checksum
-    // sidecar (.<name>.crc) from its original writer; it no longer matches
-    // the new bytes and would fail every subsequent read
-    Files.deleteIfExists(
-      dest.resolveSibling("." + dest.getFileName.toString + ".crc"))
-  }
-
-  /** Run Forget over a set of work units with bounded parallelism.
-    * Emits ObjectUpdated / ObjectUpdateFailed events (reference event
-    * taxonomy, events.py:20-47).
-    */
-  def run(spark: SparkSession, jobId: String, units: Seq[ObjectWorkUnit],
-          groups: Seq[GroupMatches], maxParallel: Int = 8,
-          outPathFor: String => Option[String] = _ => None)
-      : Seq[JobEvent] = {
-    import java.util.concurrent.Executors
-    import scala.concurrent._
-    import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(units.size, maxParallel)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // process-wide sequencer: sk order == emission order across emitters
-    def sk(): String = EventSk.next()
-    try {
-      val futures = units.map { u => Future {
-        val t0 = System.currentTimeMillis()
-        try {
-          if (u.ignoreObjectNotFound &&
-              !Files.exists(Paths.get(stripScheme(u.path))))
-            // missing object + mapper flag ⇒ skip, mirroring the
-            // distributed path and reference main.py:213-231
-            throw new ObjectNotFoundSkip(u.path)
-          val r = u.format match {
-            case DataFormat.Parquet =>
-              rewriteParquet(spark, u.path, groups, outPathFor(u.path))
-            case DataFormat.JsonLines =>
-              rewriteJsonLines(spark, u.path, groups, outPathFor(u.path))
-          }
-          Seq(JobEvent(jobId, sk(), JobEventName.ObjectUpdated,
-            System.currentTimeMillis(),
-            statsProcessed = r.processedRows, statsDeleted = r.deletedRows,
-            timeTakenMs = System.currentTimeMillis() - t0, path = u.path))
-        } catch {
-          // a successful rollback after a failed integrity check is an
-          // UPDATE failure; RollbackFailed is reserved for failures during
-          // the rollback itself. When the rollback failure FOLLOWED an
-          // update failure, emit BOTH events (reference main.py:248-262:
-          // ObjectUpdateFailed for the original + ObjectRollbackFailed).
-          case e: ObjectNotFoundSkip =>
-            Seq(JobEvent(jobId, sk(), JobEventName.ObjectUpdateSkipped,
-              System.currentTimeMillis(), path = u.path,
-              error = e.getMessage))
-          case e: RollbackFailedError =>
-            val updateFailed = Option(e.original).map(o =>
-              JobEvent(jobId, sk(), JobEventName.ObjectUpdateFailed,
-                System.currentTimeMillis(), path = u.path,
-                error = String.valueOf(o.getMessage)))
-            updateFailed.toSeq :+
-              JobEvent(jobId, sk(), JobEventName.ObjectRollbackFailed,
-                System.currentTimeMillis(), path = u.path,
-                error = e.getMessage)
-          case NonFatal(e) =>
-            Seq(JobEvent(jobId, sk(), JobEventName.ObjectUpdateFailed,
-              System.currentTimeMillis(), path = u.path,
-              error = String.valueOf(e.getMessage)))
-        }
-      }}
-      Await.result(Future.sequence(futures), Duration.Inf)
-        .flatten.sortBy(_.sk)
-    } finally pool.shutdown()
-  }
 
   /** `input_file_name()` yields a percent-encoded `file:` URI; decode it
     * to a real filesystem path (spaces, '%', unicode) — raw strings that
@@ -239,24 +12,4 @@ object Forget {
       try new java.net.URI(p).getPath
       catch { case _: java.net.URISyntaxException => p.stripPrefix("file:") }
     else p
-
-  private def firstPartFile(dir: Path, suffix: String): Path = {
-    val s = Files.list(dir)
-    try {
-      val found = s.filter(f =>
-        f.getFileName.toString.startsWith("part-") &&
-          f.getFileName.toString.endsWith(suffix)).findFirst()
-      if (!found.isPresent)
-        throw new IllegalStateException(s"no part file under $dir")
-      found.get()
-    } finally s.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(deleteRecursively) finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
 }

@@ -8,8 +8,7 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,7 +24,7 @@ import scala.util.control.NonFatal
   *     list — `input_file_name` distinct, the [[graft.find.Finder]] P2
   *     shape (the object list is bounded and driver-safe, the same
   *     collect the reference's driver performs on Athena results).
-  *   - FORGET ([[scrubObjects]]): ONE Spark job, one task per object,
+  *   - FORGET ([[scrubObjects]]): ONE Spark job, up to 32 objects a task,
   *     through [[DistributedRewrite.runWith]] — staging, CSE envelope,
   *     versioned commit, idempotency markers, marker sweep and events
   *     are the SAME code the deletion path runs; only the record

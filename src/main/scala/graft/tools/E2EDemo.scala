@@ -13,8 +13,10 @@ import scala.jdk.CollectionConverters._
 /** End-to-end verification driver: stages a private data lake (a customer
   * table split across 128 parquet objects + a JSON-lines object + a GZIP
   * JSON-lines object), runs a complete deletion job through [[JobRunner]]
-  * — Find (per-mapper queries) → ONE distributed Forget job (one task per
-  * object, [[graft.forget.DistributedRewrite]]) → cleanup → event fold to
+  * — Find (per-mapper queries) → Forget
+  * ([[graft.forget.DistributedRewrite]]: one Spark job per mapper with
+  * matches, up to 32 objects per task)
+  * → cleanup → event fold to
   * COMPLETED — then probes the engine's error taxonomy (zero-deletion ⇒
   * ObjectUpdateFailed + FORGET_PARTIALLY_FAILED; uncastable match id ⇒
   * MatchIdCastingError at planning).
@@ -88,7 +90,7 @@ object E2EDemo {
     val beforeJson = JobRunner.readTable(spark, jsonTable).count()
 
     // ---- the job
-    val run = JobRunner.run(spark, "job1", mappers, queue, distributed = true)
+    val run = JobRunner.run(spark, "job1", mappers, queue)
     println(s"== job status=${run.state.status} stats=${run.state.stats}")
     run.events.groupBy(_.eventName).toSeq.sortBy(_._1).foreach { case (n, es) =>
       println(s"   event $n x${es.size}")

@@ -257,6 +257,48 @@ class JobRunnerSpec extends SparkSpec {
     assert(run.state.stats.totalRowsDeletedCount == 1)
   }
 
+  test("a deletion job on a non-local filesystem registered only on the " +
+    "session's Hadoop conf: Find's footer stats and the Hadoop commit " +
+    "path both resolve the scheme") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.graftfs.impl", classOf[NonLocalTestFs].getName)
+    hconf.setBoolean("fs.graftfs.impl.disable.cache", true)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft-nonlocal-")
+      val loc = s"graftfs://$dir/t"
+      Seq((1L, "a"), (7L, "b"), (9L, "c"), (7L, "d")).toDF("customer_id", "x")
+        .coalesce(1).write.parquet(loc)
+      val table = TableDef("t", loc, DataFormat.Parquet,
+        spark.read.parquet(loc).schema)
+      val tablePath = new org.apache.hadoop.fs.Path(loc)
+      assert(!tablePath.getFileSystem(hconf)
+        .isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
+      // deleteOldVersions = false keeps the version the commit captured
+      val run = JobRunner.run(spark, "jnl",
+        Seq(DataMapper("m", "t", Seq("customer_id"),
+          deleteOldVersions = false) -> table),
+        Seq(DeletionQueueItem("q", MatchId.Simple("7"))))
+      assert(run.state.status == JobStatus.Completed, run.events)
+      assert(run.state.stats.totalObjectUpdatedCount == 1)
+      assert(run.state.stats.totalRowsDeletedCount == 2)
+      assert(run.state.stats.totalQueryScannedInBytes > 0)
+      assert(spark.read.parquet(loc).select("x").as[String].collect()
+        .sorted.toSeq == Seq("a", "c"))
+      // the Hadoop swap branch captured the pre-rewrite object
+      val obj = new org.apache.hadoop.fs.Path(run.foundPaths("m").head)
+      val versions = java.nio.file.Files.list(
+        dir.resolve("t").resolve(".graft-versions").resolve(obj.getName))
+      val kept = try versions.toArray.map(_.toString).toSeq
+        finally versions.close()
+      assert(kept.size == 1, kept)
+      assert(graft.tools.ParquetStats.rowCount(hconf,
+        s"graftfs://${kept.head}") == 4L)
+    } finally {
+      hconf.unset("fs.graftfs.impl")
+      hconf.unset("fs.graftfs.impl.disable.cache")
+    }
+  }
+
   test("simple item scoped to several mappers applies to each") {
     val (_, t1) = lake()
     val (_, t2) = lake()
@@ -366,4 +408,12 @@ class JobRunnerSpec extends SparkSpec {
         s"$mid survivors")
     }
   }
+}
+
+/** The raw local filesystem under a test-only `graftfs` scheme: not a
+  * `LocalFileSystem`, so the engine takes its Hadoop (non-java.nio) IO
+  * paths, and unknown to a bare `new Configuration()`. */
+class NonLocalTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+  override def getScheme: String = "graftfs"
 }

@@ -6,14 +6,16 @@ import graft.find.Finder
 import graft.model._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 
-/** Parquet Forget semantics on BOTH backends — the driver-side
-  * [[Forget.rewriteParquet]] (spark.write) and the task-side
-  * [[DistributedRewrite]] (parquet-mr Group I/O) — porting the reference
-  * edge inventory from tests/unit/ecs_tasks/test_parquet.py (:77 correct
-  * rows, :111 lower-cased columns, :151 struct types, :180-:254 composite
-  * variants, :319-:372 decimals) plus the engine invariants (zero-deletion,
-  * schema preservation, multi-row-group files).
+/** Parquet Forget semantics of [[DistributedRewrite]] (parquet-mr Group
+  * I/O), each rewrite checked against the Catalyst reference
+  * [[Finder.survivors]] — porting the reference edge inventory from
+  * tests/unit/ecs_tasks/test_parquet.py (:77 correct rows, :111
+  * lower-cased columns, :151 struct types, :180-:254 composite variants,
+  * :319-:372 decimals) plus the engine invariants (zero-deletion, schema
+  * preservation, multi-row-group files, failure isolation in a batched
+  * task).
   */
 class ForgetSpec extends SparkSpec {
   import spark.implicits._
@@ -23,36 +25,34 @@ class ForgetSpec extends SparkSpec {
     Finder.plan(DataMapper("m", "t", cols),
       TableDef("t", "", DataFormat.Parquet, d.schema), queue)
 
-  /** Run one file through a backend; returns (survivorDf, processed,
-    * deleted). */
-  private def rewrite(file: String, groups: Seq[Finder.GroupMatches],
-                      distributed: Boolean): (DataFrame, Long, Long) = {
-    if (distributed) {
-      val events = DistributedRewrite.run(spark, "j",
-        Seq(ObjectWorkUnit("j", file, "m", DataFormat.Parquet, true)), groups)
-      assert(events.map(_.eventName) == Seq(JobEventName.ObjectUpdated),
-        s"unexpected events: $events")
-      (spark.read.parquet(file),
-        events.head.statsProcessed, events.head.statsDeleted)
-    } else {
-      val r = Forget.rewriteParquet(spark, file, groups)
-      (spark.read.parquet(file), r.processedRows, r.deletedRows)
-    }
-  }
-
-  private def bothBackends(name: String)(body: Boolean => Unit): Unit = {
-    test(s"$name [driver]")(body(false))
-    test(s"$name [distributed]")(body(true))
+  /** Run one file through [[DistributedRewrite]]; returns (survivorDf,
+    * processed, deleted). The survivors must equal [[Finder.survivors]]
+    * (the Catalyst anti-filter) over a copy of the original file. */
+  private def rewrite(file: String, groups: Seq[Finder.GroupMatches])
+      : (DataFrame, Long, Long) = {
+    val original = Files.createTempDirectory("graft-orig-")
+      .resolve("orig.parquet")
+    Files.copy(Paths.get(file), original)
+    val events = DistributedRewrite.run(spark, "j",
+      Seq(ObjectWorkUnit("j", file, "m", DataFormat.Parquet, true)), groups)
+    assert(events.map(_.eventName) == Seq(JobEventName.ObjectUpdated),
+      s"unexpected events: $events")
+    val out = spark.read.parquet(file)
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(out) == rows(Finder.survivors(spark,
+      spark.read.parquet(original.toString), groups)))
+    (out, events.head.statsProcessed, events.head.statsDeleted)
   }
 
   // ---- test_parquet.py:77 — delete correct rows ---------------------
 
-  bothBackends("deletes exactly the matching rows") { dist =>
+  test("deletes exactly the matching rows [distributed]") {
     val d = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("customer_id", "x")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("customer_id"),
       Seq(DeletionQueueItem("q", MatchId.Simple("2"))))
-    val (out, processed, deleted) = rewrite(file, groups, dist)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (3L, 1L))
     assert(out.select("customer_id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 3L))
@@ -60,19 +60,19 @@ class ForgetSpec extends SparkSpec {
 
   // ---- test_parquet.py:111 — lower-cased (mismatched-case) columns --
 
-  bothBackends("column lookup is case-insensitive") { dist =>
+  test("column lookup is case-insensitive [distributed]") {
     val d = Seq((1L, "a"), (2L, "b")).toDF("customerId", "x")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("CUSTOMERID"),
       Seq(DeletionQueueItem("q", MatchId.Simple("1"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("customerId").as[Long].collect().toSeq == Seq(2L))
   }
 
   // ---- test_parquet.py:151 — complex (struct) types -----------------
 
-  bothBackends("deletes rows matched through nested struct dot paths") { dist =>
+  test("deletes rows matched through nested struct dot paths [distributed]") {
     val d = spark.read.json(Seq(
       """{"id":1,"user":{"info":{"email":"x@y.z"},"age":30}}""",
       """{"id":2,"user":{"info":{"email":"a@b.c"},"age":40}}""",
@@ -80,14 +80,14 @@ class ForgetSpec extends SparkSpec {
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("user.info.email"),
       Seq(DeletionQueueItem("q", MatchId.Simple("x@y.z"))))
-    val (out, processed, deleted) = rewrite(file, groups, dist)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (3L, 1L))
     assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
   }
 
   // ---- test_parquet.py:180,:208,:230,:254 — composite variants ------
 
-  bothBackends("composite match deletes only full-tuple matches") { dist =>
+  test("composite match deletes only full-tuple matches [distributed]") {
     val d = Seq(("john", "doe", 1L), ("john", "smith", 2L),
       ("jane", "doe", 3L)).toDF("first_name", "last_name", "n")
     val file = stageParquetFile(d)
@@ -95,24 +95,24 @@ class ForgetSpec extends SparkSpec {
       Seq(DeletionQueueItem("q", MatchId.Composite(
         Map("first_name" -> "john", "last_name" -> "doe")),
         dataMappers = Seq("m"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("n").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
   }
 
-  bothBackends("single-column composite behaves like a scoped simple") { dist =>
+  test("single-column composite behaves like a scoped simple [distributed]") {
     val d = Seq(("john", 1L), ("jane", 2L)).toDF("first_name", "n")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("first_name"),
       Seq(DeletionQueueItem("q",
         MatchId.Composite(Map("first_name" -> "jane")),
         dataMappers = Seq("m"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("n").as[Long].collect().toSeq == Seq(1L))
   }
 
-  bothBackends("composite over nested struct paths") { dist =>
+  test("composite over nested struct paths [distributed]") {
     val d = spark.read.json(Seq(
       """{"n":1,"user":{"first":"john","last":"doe"}}""",
       """{"n":2,"user":{"first":"john","last":"smith"}}""").toDS)
@@ -121,38 +121,38 @@ class ForgetSpec extends SparkSpec {
       Seq(DeletionQueueItem("q", MatchId.Composite(
         Map("user.first" -> "john", "user.last" -> "doe")),
         dataMappers = Seq("m"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("n").as[Long].collect().toSeq == Seq(2L))
   }
 
   // ---- test_parquet.py:319-:372 — decimal handling ------------------
 
-  bothBackends("decimal match ids coerce to column scale (int64-backed)") { dist =>
+  test("decimal match ids coerce to column scale (int64-backed) [distributed]") {
     val d = Seq((1L, "12.34"), (2L, "56.70"), (3L, "99.99"))
       .toDF("id", "s")
       .withColumn("bal", col("s").cast("decimal(12,2)")).drop("s")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("bal"),
       Seq(DeletionQueueItem("q", MatchId.Simple("56.7"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
 
-  bothBackends("wide decimals (binary-backed, precision>18) match") { dist =>
+  test("wide decimals (binary-backed, precision>18) match [distributed]") {
     val d = Seq((1L, "123456789012345.6789"), (2L, "5.5"))
       .toDF("id", "s")
       .withColumn("bal", col("s").cast("decimal(38,4)")).drop("s")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("bal"),
       Seq(DeletionQueueItem("q", MatchId.Simple("123456789012345.6789"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
-  bothBackends("decimal component inside a composite coerces too") { dist =>
+  test("decimal component inside a composite coerces too [distributed]") {
     val d = Seq((1L, "a", "12.34"), (2L, "a", "99.99"))
       .toDF("id", "k", "s")
       .withColumn("bal", col("s").cast("decimal(12,2)")).drop("s")
@@ -160,25 +160,25 @@ class ForgetSpec extends SparkSpec {
     val groups = plan(d, Seq("k", "bal"),
       Seq(DeletionQueueItem("q", MatchId.Composite(
         Map("k" -> "a", "bal" -> "12.340")), dataMappers = Seq("m"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
   // ---- engine invariants --------------------------------------------
 
-  bothBackends("null identifier rows always survive") { dist =>
+  test("null identifier rows always survive [distributed]") {
     val d = Seq((Some(1L), "a"), (None, "b"), (Some(2L), "c"))
       .toDF("id", "x")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("id"),
       Seq(DeletionQueueItem("q", MatchId.Simple("1"))))
-    val (out, processed, deleted) = rewrite(file, groups, dist)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (3L, 1L))
     assert(out.select("x").as[String].collect().sorted.toSeq == Seq("b", "c"))
   }
 
-  bothBackends("schema is preserved by the rewrite") { dist =>
+  test("schema is preserved by the rewrite [distributed]") {
     val d = Seq((1L, "a", 1.5, true)).toDF("id", "s", "d", "b")
       .withColumn("dec", col("d").cast("decimal(10,3)"))
       .withColumn("arr", array(lit(1), lit(2)))
@@ -189,7 +189,7 @@ class ForgetSpec extends SparkSpec {
     val before = spark.read.parquet(file).schema
     val groups = plan(withMatch, Seq("id"),
       Seq(DeletionQueueItem("q", MatchId.Simple("2"))))
-    val (out, _, _) = rewrite(file, groups, dist)
+    val (out, _, _) = rewrite(file, groups)
     assert(out.schema == before)
     assert(out.count() == 1)
   }
@@ -206,17 +206,9 @@ class ForgetSpec extends SparkSpec {
     val groups = plan(d, Seq("id"), Seq(
       DeletionQueueItem("a", MatchId.Simple("5")),
       DeletionQueueItem("b", MatchId.Simple("1999"))))
-    val (out, processed, deleted) = rewrite(file, groups, distributed = true)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (2000L, 2L))
     assert(out.count() == 1998)
-  }
-
-  test("zero-deletion on a found object is an error (driver backend)") {
-    val d = Seq((1L, "a")).toDF("id", "x")
-    val file = stageParquetFile(d)
-    val groups = plan(d, Seq("id"),
-      Seq(DeletionQueueItem("q", MatchId.Simple("999"))))
-    intercept[ZeroDeletionError](Forget.rewriteParquet(spark, file, groups))
   }
 
   test("zero-deletion emits ObjectUpdateFailed (distributed backend)") {
@@ -247,15 +239,70 @@ class ForgetSpec extends SparkSpec {
     assert(failed.map(_.eventName) == Seq(JobEventName.ObjectUpdateFailed))
   }
 
-  test("driver-pool Forget.run also skips missing objects with the flag") {
-    val d = Seq((1L, "a")).toDF("id", "x")
-    val table = graft.catalog.TableDef("t", "", DataFormat.Parquet, d.schema)
-    val groups = Finder.plan(DataMapper("m", "t", Seq("id")), table,
-      Seq(DeletionQueueItem("q", MatchId.Simple("1"))))
-    val events = Forget.run(spark, "j", Seq(
-      ObjectWorkUnit("j", "/nope/missing.parquet", "m", DataFormat.Parquet,
-        deleteOldVersions = true, ignoreObjectNotFound = true)), groups)
-    assert(events.map(_.eventName) == Seq(JobEventName.ObjectUpdateSkipped))
+  test("a batched task isolates one object's failure: 40 objects at " +
+    "local[4] pack 2 per task, the zero-match object fails alone and " +
+    "stays byte-identical") {
+    // spark.range splits 0..119 evenly: part file i holds ids 3i..3i+2
+    val dir = Files.createTempDirectory("graft-batch-").resolve("t").toString
+    spark.range(0, 120, 1, 40).toDF("id")
+      .withColumn("x", concat(lit("row"), col("id").cast("string")))
+      .write.parquet(dir)
+    val listing = Files.list(Paths.get(dir))
+    val files = try listing.toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).sorted.toSeq finally listing.close()
+    assert(files.size == 40)
+    val d = spark.read.parquet(dir)
+    // delete the first id of every object but the one holding 60..62
+    val groups = plan(d, Seq("id"), (0 until 40).filter(_ != 20).map(i =>
+      DeletionQueueItem(s"q$i", MatchId.Simple((3 * i).toString))))
+    val zeroMatch = Forget.stripScheme(d.where(col("id") === 60L)
+      .select(input_file_name()).as[String].head())
+    val before = files.map(f => f -> Files.readAllBytes(Paths.get(f))).toMap
+    // count the tasks of every stage the run submits; a fence job in
+    // another group marks the end (the listener bus delivers in order)
+    val group = "graft-batched-forget"
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) =>
+            e.stageInfos.foreach(st => stageTasks.put(st.stageId, st.numTasks))
+          case Some(g) if g == s"$group-fence" => fenceSeen.countDown()
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val events =
+      try {
+        spark.sparkContext.setJobGroup(group, "batched forget")
+        val ev = DistributedRewrite.run(spark, "jb", files.map(f =>
+          ObjectWorkUnit("jb", f, "m", DataFormat.Parquet, true)), groups)
+        spark.sparkContext.setJobGroup(s"$group-fence", "fence")
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        assert(fenceSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        ev
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    val failed = events.filter(_.eventName == JobEventName.ObjectUpdateFailed)
+    assert(failed.map(_.path) == Seq(zeroMatch), s"events: $events")
+    assert(Files.readAllBytes(Paths.get(zeroMatch))
+      .sameElements(before(zeroMatch)))
+    val updated = events.filter(_.eventName == JobEventName.ObjectUpdated)
+    assert(updated.map(_.path).sorted == files.filterNot(_ == zeroMatch))
+    assert(updated.forall(e => (e.statsProcessed, e.statsDeleted) == (3L, 1L)))
+    updated.foreach(e => assert(
+      !Files.readAllBytes(Paths.get(e.path)).sameElements(before(e.path))))
+    assert(events.size == 40)
+    assert(spark.read.parquet(dir).count() == 120 - 39)
+    // every stage of the forget run together ran fewer tasks than objects
+    import scala.jdk.CollectionConverters._
+    val tasks = stageTasks.values.asScala.map(_.intValue).sum
+    assert(tasks > 0 && tasks < files.size,
+      s"forget ran $tasks tasks for ${files.size} objects")
   }
 
   test("CatalogPartitions enumerates hive partition combinations (S4) " +
@@ -346,7 +393,7 @@ class ForgetSpec extends SparkSpec {
     assert(d.where(col("u32") === 4294967295L).count() == 1)
     val groups = plan(d, Seq("u32"),
       Seq(DeletionQueueItem("q", MatchId.Simple("4294967295"))))
-    val (out, processed, deleted) = rewrite(file, groups, distributed = true)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (2L, 1L))
     assert(out.select("x").as[String].collect().toSeq == Seq("small"))
   }
@@ -361,7 +408,7 @@ class ForgetSpec extends SparkSpec {
     assert(d.where(col("u64") === new java.math.BigDecimal(big)).count() == 1)
     val groups = plan(d, Seq("u64"),
       Seq(DeletionQueueItem("q", MatchId.Simple(big))))
-    val (out, processed, deleted) = rewrite(file, groups, distributed = true)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (2L, 1L))
     assert(out.select("x").as[String].collect().toSeq == Seq("small"))
   }
@@ -413,7 +460,7 @@ class ForgetSpec extends SparkSpec {
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("f"),
       Seq(DeletionQueueItem("q", MatchId.Simple("NaN"))))
-    val (out, _, deleted) = rewrite(file, groups, distributed = true)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("id").as[Long].collect().toSeq == Seq(1L))
   }
